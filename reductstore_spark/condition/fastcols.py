@@ -528,12 +528,11 @@ class FlatCompiler:
         # predicate can raise_error with the reference's text instead of
         # falling back to the interpreted struct compiler
         self.strict = strict
-        # virtual labels: name -> string Column evaluated directly against
+        # virtual labels: name -> SQL text of a string expression over
         # source columns, skipping the derived-map construction (a mapped
         # source otherwise re-parses/re-builds the map once per reference).
-        # Values may be SQL TEXT (r11: providers emit strings so the
-        # expression-string tier pays zero py4j calls); they wrap into
-        # Columns lazily at the consumption sites (_lc).
+        # Text keeps the expression-string tier free of py4j calls; it
+        # wraps into a Column lazily at the consumption sites (_lc).
         self.label_columns = label_columns or {}
         # pre-bound leaves: name -> (raw, num, flt) attribute Columns the
         # planner materialized below the filter (see label_parts)
@@ -546,7 +545,10 @@ class FlatCompiler:
 
     # -- public ----------------------------------------------------------
     def predicate(self, node: Node) -> Column:
-        fv = self.compile(node)
+        return self.as_predicate(self.compile(node))
+
+    def as_predicate(self, fv: FV) -> Column:
+        """Filter predicate of a compiled FV."""
         if self.strict:
             # filters/when.rs:81-95 — evaluation errors fail the query
             em = _emsg(fv)
@@ -594,13 +596,10 @@ class FlatCompiler:
         return F.lit(f"Reference '{sigil}{name}' not found")
 
     def _lc(self, name: str) -> Column:
-        """Virtual-label Column; SQL-text values wrap lazily (the
+        """Virtual-label Column; the SQL text wraps lazily (the
         expression-string substrate overrides F with a text builder, so
         this stays correct under both compilers)."""
-        v = self.label_columns[name]
-        if isinstance(v, str):
-            v = F.expr(v)
-        return v
+        return F.expr(self.label_columns[name])
 
     def compile(self, node: Node) -> FV:
         if self._in_compile:

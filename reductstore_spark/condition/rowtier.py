@@ -11,8 +11,8 @@ reference never compiles at all — ``condition.rs`` applies the AST per
 record — so for the deep band we do exactly that: an Arrow-batched
 pandas UDF running the ground-truth ``Evaluator`` per row.  Cost is
 O(rows x ast) like the reference's own engine, with none of the
-compile-time cliffs.  The planner routes here only when
-``columns.lambda_depth_estimate`` says the struct tier would stall;
+compile-time cliffs.  The planner routes here only when the struct
+tier's lambda-depth estimate says it would stall;
 realistic conditions (nesting <= 3) never reach this module.
 """
 

@@ -1,4 +1,4 @@
-"""Expression-string fast path for the flat condition tier (r11).
+"""SQL-text substrate for the flat condition compiler.
 
 The flat compiler (``fastcols.py``) is semantically exact but builds its
 result as pyspark ``Column`` objects — every ``F.xxx`` call and Column
@@ -8,11 +8,14 @@ was measured at ~0.5 s per query across the ~85 records-model bench
 entries (guide §1.2: the distributed algorithm includes the driver).
 
 This module eliminates the boundary without forking the compiler logic:
-``fastcols.py`` is re-executed as a second module instance whose ``F``
-and ``Column`` globals are replaced by a pure-Python SQL-text expression
-builder (``SF`` / ``SCol``).  The EXACT SAME compiler code then emits
-one SQL string per predicate/lane, and the only py4j calls left are the
-final ``selectExpr``/``F.expr`` — ~2 per query instead of ~10^3.
+``fastcols.py`` is re-executed as a second module instance ``_M`` whose
+``F`` and ``Column`` globals are replaced by a pure-Python SQL-text
+expression builder (``SF`` / ``SCol``).  The EXACT SAME compiler code
+then emits one SQL string per predicate/lane, and the only py4j calls
+left are the final ``selectExpr``/``F.expr`` — ~2 per query instead of
+~10^3.  The planner's predicate ladder (``plans/planner.py:_compile``)
+runs ``_M`` as its first rung; ``predicate_sql``, ``truthy_err_sql`` and
+``truthy_emsg_sql`` expose single unbound conditions as text.
 
 Equivalence argument: the compiled expression TREE is produced by the
 same Python control flow, so the string form can only diverge from the
@@ -35,23 +38,19 @@ Catalyst expression the pyspark API builds:
 
 The three-layer compile-size budget is preserved: layer 1 (AST guard)
 and layer 2 (the pure-Python screen) run unchanged inside the reloaded
-module; a condition the screen flags is raised as ``Unsupported`` HERE
-(before compiling), routing it to the Column-based flat tier whose
-layer-3 exact JVM tree measurement still applies.  The struct tier and
-interpreter fallbacks behind it are untouched.
+module; a condition the screen flags is refused (``_screen``) before
+compiling, and so is text over ``_MAX_TEXT``, which routes it to the
+Column-based flat rung whose layer-3 exact JVM tree measurement still
+applies.
 """
 
 from __future__ import annotations
 
 import importlib.util
-from typing import Dict, List, Optional
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from typing import Dict, Optional
 
 from . import fastcols as _fc
-from . import values as V
-from .ast import ComputedRef, Const, LabelRef, Node, Op
+from .ast import Node
 
 # -- SQL text fragments -------------------------------------------------
 
@@ -381,20 +380,6 @@ _M = _load_text_compiler()
 _MAX_TEXT = 65_536
 
 
-def _collect_refs(node: Node, labels, computed):
-    if isinstance(node, LabelRef):
-        labels.add(node.name)
-    elif isinstance(node, ComputedRef):
-        computed.add(node.name)
-    elif isinstance(node, Op):
-        if (node.name == "$ref" and len(node.operands) == 1
-                and isinstance(node.operands[0], Const)):
-            labels.add(V.to_display(node.operands[0].value))
-            return
-        for o in node.operands:
-            _collect_refs(o, labels, computed)
-
-
 def _screen(node: Node, strict: bool) -> None:
     """Layer-2 screen, applied BEFORE compiling: over-estimate shapes
     need the Column tier's exact layer-3 JVM measurement, which the
@@ -403,168 +388,48 @@ def _screen(node: Node, strict: bool) -> None:
         raise _fc.Unsupported("string tier: over compile-size screen")
 
 
-def flat_bound_sql(df: DataFrame, nodes: List[Node],
-                   label_columns: Optional[Dict[str, str]] = None,
-                   strict: bool = False):
-    """String-substrate mirror of ``planner._flat_bound``.
-
-    ``label_columns`` values must be SQL TEXT (virtual-label expressions,
-    e.g. from ``schema.events_label_columns``); any pyspark Column value
-    raises ``Unsupported`` so the caller falls back to the Column tier.
-
-    Returns ``(bound_df, [predicate Column per node], added_col_names)``
-    with exactly TWO py4j surfaces: one ``selectExpr`` for the leaf
-    projection (+ pushdown barrier) and one ``F.expr`` per predicate.
-    """
-    label_columns = label_columns or {}
-    for v in label_columns.values():
-        if not isinstance(v, str):
-            raise _fc.Unsupported("string tier: Column-valued label_columns")
-    computed_col = ("computed_labels" if "computed_labels" in df.columns
-                    else None)
-    lnames, cnames = set(), set()
-    for n in nodes:
-        _screen(n, strict)
-        _collect_refs(n, lnames, cnames)
-
-    adds = []  # (alias, sql_text)
-    label_fvs, computed_fvs = {}, {}
-
-    def bind(name, raw_s, prefix, i):
-        ra, nu, fl, lg = (f"__{prefix}r{i}", f"__{prefix}n{i}",
-                          f"__{prefix}f{i}", f"__{prefix}l{i}")
-        num, flt, lng = _M.label_parts(SCol(raw_s))
-        adds.extend([(ra, raw_s), (nu, num.s), (fl, flt.s), (lg, lng.s)])
-        return (SF.col(ra), SF.col(nu), SF.col(fl), SF.col(lg))
-
-    for i, name in enumerate(sorted(lnames)):
-        raw_s = (f"({label_columns[name]})" if name in label_columns
-                 else f"element_at({sql_ident('labels')}, {sql_str(name)})")
-        label_fvs[name] = bind(name, raw_s, "lb", i)
-    if computed_col:
-        for i, name in enumerate(sorted(cnames)):
-            raw_s = (f"element_at({sql_ident(computed_col)}, "
-                     f"{sql_str(name)})")
-            computed_fvs[name] = bind(name, raw_s, "cb", i)
-
-    comp = SF.col(computed_col) if computed_col else None
+def _texts(node: Node, computed_col: Optional[str],
+           label_columns: Optional[Dict[str, str]], strict: bool, lanes):
+    """SQL texts of ``lanes(compiler, fv)`` for one unbound ``node``
+    (labels-map lookups inline), under the screen and the text cap."""
+    _screen(node, strict)
     compiler = _M.FlatCompiler(
-        SF.col("ts"), SF.col("labels"), comp,
-        label_columns={k: SCol(f"({v})") for k, v in label_columns.items()},
-        label_fvs=label_fvs, computed_fvs=computed_fvs, strict=strict)
-
-    def compile_pred(n):
-        # wide top-level conjunctions: bind each operand's (truthy, err
-        # [, emsg]) as attributes — same shape as planner._flat_bound
-        inner = n
-        while (isinstance(inner, Op) and inner.name == "$and"
-               and len(inner.operands) == 1):
-            inner = inner.operands[0]
-        if not (isinstance(inner, Op) and inner.name in ("$and", "$or")
-                and len(inner.operands) >= 3):
-            return compiler.predicate(n).s
-        ops = []
-        for j, o in enumerate(inner.operands):
-            fv = compiler.compile(o)  # may raise Unsupported
-            t, e = f"__cj{j}t{len(adds)}", f"__cj{j}e{len(adds)}"
-            adds.append((t, SF.coalesce(_M._truthy(fv), SF.lit(False)).s))
-            adds.append((e, SF.coalesce(_M._err(fv), SF.lit(False)).s))
-            nfv = _M.FV(num=SF.col(t).cast("double"), err=SF.col(e),
-                        numeric_only=True, bound=1, skind="boolean")
-            if strict:
-                m = f"__cj{j}m{len(adds)}"
-                adds.append((m, _M._emsg(fv).s))
-                nfv.emsg = SF.col(m)
-            ops.append(nfv)
-        combined = compiler._logical(inner.name, ops)
-        if strict:
-            em = _M._emsg(combined)
-            return SF.when(em.isNotNull(), SF.raise_error(em)).otherwise(
-                SF.coalesce(_M._truthy(combined), SF.lit(False))).s
-        return SF.coalesce(_M._truthy(combined) & ~_M._err(combined),
-                           SF.lit(False)).s
-
-    texts = [compile_pred(n) for n in nodes]  # may raise Unsupported
-
-    total = sum(len(t) for t in texts) + sum(len(t) for _, t in adds)
+        SF.col("ts"), SF.col("labels"),
+        SF.col(computed_col) if computed_col else None,
+        label_columns=label_columns, strict=strict)
+    texts = [c.s for c in lanes(compiler, compiler.compile(node))]
+    total = sum(len(t) for t in texts)
     if total > _MAX_TEXT:
         raise _fc.Unsupported(f"string tier: {total} chars of SQL text")
+    return texts
 
-    if not adds:
-        return df, [F.expr(t) for t in texts], []
-    bound = df.selectExpr(
-        "*", *[f"({t}) AS {sql_ident(a)}" for a, t in adds],
-        "monotonically_increasing_id() AS __lb_barrier")
-    # pushdown barrier, identical to planner._flat_bound: the project
-    # carries a nondeterministic field and every predicate references it
-    # through an always-false disjunct
-    texts = [f"(({t}) OR (`__lb_barrier` < -1))" for t in texts]
-    return (bound, [F.expr(t) for t in texts],
-            [a for a, _ in adds] + ["__lb_barrier"])
+
+def _false_if_null(c):
+    return SF.coalesce(c, SF.lit(False))
+
+
+def predicate_sql(node: Node, computed_col: Optional[str] = None,
+                  label_columns: Optional[Dict[str, str]] = None,
+                  strict: bool = False) -> str:
+    """Whole-predicate SQL text — the text form of
+    ``FlatCompiler.predicate``."""
+    return _texts(node, computed_col, label_columns, strict,
+                  lambda c, fv: [c.as_predicate(fv)])[0]
 
 
 def truthy_err_sql(node: Node, computed_col: Optional[str] = None,
                    label_columns: Optional[Dict[str, str]] = None):
-    """(truthy_text, err_text) of a non-strict compiled FV, null-safe —
-    the string analog of ``coalesce(_truthy(fv), F) / coalesce(_err(fv),
-    F)`` used by the vectorized time-stateful tier."""
-    label_columns = label_columns or {}
-    for v in label_columns.values():
-        if not isinstance(v, str):
-            raise _fc.Unsupported("string tier: Column-valued label_columns")
-    _screen(node, False)
-    comp = SF.col(computed_col) if computed_col else None
-    compiler = _M.FlatCompiler(
-        SF.col("ts"), SF.col("labels"), comp,
-        label_columns={k: SCol(f"({v})") for k, v in label_columns.items()})
-    fv = compiler.compile(node)
-    t = SF.coalesce(_M._truthy(fv), SF.lit(False)).s
-    e = SF.coalesce(_M._err(fv), SF.lit(False)).s
-    if len(t) + len(e) > _MAX_TEXT:
-        raise _fc.Unsupported("string tier: oversized SQL text")
-    return t, e
+    """Non-strict (coalesce(truthy, false), coalesce(err, false)) texts —
+    the text form of the planner's ``(truthy, err)`` lanes."""
+    return tuple(_texts(node, computed_col, label_columns, False,
+                        lambda c, fv: [_false_if_null(_M._truthy(fv)),
+                                       _false_if_null(_M._err(fv))]))
 
 
 def truthy_emsg_sql(node: Node, computed_col: Optional[str] = None,
                     label_columns: Optional[Dict[str, str]] = None):
     """STRICT-mode (coalesce(truthy, false), emsg) texts — the string
     analog of the message-parity fuzz lanes."""
-    label_columns = label_columns or {}
-    for v in label_columns.values():
-        if not isinstance(v, str):
-            raise _fc.Unsupported("string tier: Column-valued label_columns")
-    _screen(node, True)
-    comp = SF.col(computed_col) if computed_col else None
-    compiler = _M.FlatCompiler(
-        SF.col("ts"), SF.col("labels"), comp,
-        label_columns={k: SCol(f"({v})") for k, v in label_columns.items()},
-        strict=True)
-    fv = compiler.compile(node)
-    t = SF.coalesce(_M._truthy(fv), SF.lit(False)).s
-    e = _M._emsg(fv).s
-    if len(t) + len(e) > _MAX_TEXT:
-        raise _fc.Unsupported("string tier: oversized SQL text")
-    return t, e
-
-
-def predicate_sql(node: Node, computed_col: Optional[str] = None,
-                  label_columns: Optional[Dict[str, str]] = None,
-                  strict: bool = False) -> str:
-    """Whole-predicate SQL text with UNBOUND leaves (labels-map lookups
-    inline) — the no-projection analog of ``FlatCompiler.predicate`` for
-    callers that cannot add bind columns.  Same screen + fallback rules
-    as ``flat_bound_sql``."""
-    label_columns = label_columns or {}
-    for v in label_columns.values():
-        if not isinstance(v, str):
-            raise _fc.Unsupported("string tier: Column-valued label_columns")
-    _screen(node, strict)
-    comp = SF.col(computed_col) if computed_col else None
-    compiler = _M.FlatCompiler(
-        SF.col("ts"), SF.col("labels"), comp,
-        label_columns={k: SCol(f"({v})") for k, v in label_columns.items()},
-        strict=strict)
-    text = compiler.predicate(node).s
-    if len(text) > _MAX_TEXT:
-        raise _fc.Unsupported(f"string tier: {len(text)} chars of SQL text")
-    return text
+    return tuple(_texts(node, computed_col, label_columns, True,
+                        lambda c, fv: [_false_if_null(_M._truthy(fv)),
+                                       _M._emsg(fv)]))

@@ -4994,8 +4994,8 @@ QUERIES = {k: QUERIES[k]
 # within the r8 window (computed, not hand-listed, so the assert below
 # pins the count).  The remaining 24 slots go to condition-family
 # entries whose COMPILE path changed this round (the expression-string
-# tier now compiles every flat-tier `when` predicate;
-# condition/strtier.py): heaviest conditions first, then the stateful /
+# tier now compiles every flat-tier `when` predicate): heaviest
+# conditions first, then the stateful /
 # ctx / store rows that route through the same planner seams.  Union
 # r1-r11 target: 124/124 with max staleness r9.
 _R11_STALE = [n for n in _R8_WINDOW

@@ -200,7 +200,7 @@ def _flat_value_display(node, labels: Column, computed: Column,
     ``label_fvs`` passes pre-bound (raw, num, flt, lng) leaf columns so every
     source-label reference compiles to an attribute read instead of
     re-inlining the dynamic-parse tree (same let-binding the planner
-    does for predicates, planner._flat_bound)."""
+    does for predicates, planner.bind_leaves)."""
     from ..condition import values as V
     from ..condition.ast import Const, Op
     from ..condition import fastcols as FC
@@ -302,27 +302,19 @@ def _label_expr_compiled(df: DataFrame, params,
         return None
 
     # let-bind the (raw, num, flt, lng) parse of every referenced source
-    # label ONCE (planner._flat_bound's trick, here for value
+    # label ONCE (the planner's bind_leaves, here for value
     # expressions): each leaf reference inside a label expression then
     # reads an attribute instead of re-inlining the dynamic-parse
     # tree — which the ext_pipeline plan showed repeated ~10x per row.
     # Only source labels pre-bind; @computed refs stay dynamic because
     # step k must see step k-1's upserts.
-    from ..condition.fastcols import label_parts
-    from ..plans.planner import _collect_refs
+    from ..condition import fastcols
+    from ..plans.planner import _collect_refs, bind_leaves
     lnames = set()
     for node in specs.values():
-        lnames, _cnames = _collect_refs(node, lnames, set())
-    adds, label_fvs = [], {}
-    for i, name in enumerate(sorted(lnames)):
-        from ..plans.planner import _lc_col
-        raw = (_lc_col(label_columns[name])
-               if label_columns and name in label_columns
-               else F.element_at(F.col("labels"), F.lit(name)))
-        num, flt, lng = label_parts(raw)
-        ra, nu, fl, lg = f"__exr{i}", f"__exn{i}", f"__exf{i}", f"__exl{i}"
-        adds.extend([(ra, raw), (nu, num), (fl, flt), (lg, lng)])
-        label_fvs[name] = (F.col(ra), F.col(nu), F.col(fl), F.col(lg))
+        _collect_refs(node, lnames, set())
+    adds = []
+    label_fvs = bind_leaves(fastcols, lnames, label_columns or {}, adds, "ex")
     if adds:
         df = df.select("*", *[c.alias(a) for a, c in adds])
 

@@ -139,48 +139,23 @@ def apply_when_stateful_slim(
         # WhenFilter applies label projection on emit; the slim records
         # carry no labels to project — use the full path
         return None
-    from pyspark.sql import functions as _F
-
-    from ..condition.fastcols import FlatCompiler, Unsupported, _err, _truthy
+    from ..condition.fastcols import Unsupported
+    from ..plans.planner import _compile
 
     preds: List[Node] = []
     try:
         slim_node = _slimify(node, preds)
-    except _SlimUnsupported:
+        # 3-state primitive: "true" / "false" / null where the subtree
+        # errored
+        _, lanes, _ = _compile(df, [], False, label_columns, lanes=preds,
+                               bind=False, last="flat")
+    except (_SlimUnsupported, Unsupported):
         return None
-
-    computed = "computed_labels" if "computed_labels" in df.columns else None
-    base_cols = [_F.col("bucket"), _F.col("entry"), _F.col("ts")]
-    cols = None
-    if all(isinstance(v, str) for v in (label_columns or {}).values()):
-        # expression-string fast path (r11): the 3-state primitive text
-        # mirrors the Column form below exactly
-        from ..condition.strtier import truthy_err_sql
-        try:
-            cols = list(base_cols)
-            for i, p in enumerate(preds):
-                t, e = truthy_err_sql(p, computed, label_columns)
-                cols.append(_F.expr(
-                    f"CASE WHEN ({e}) THEN CAST(NULL AS STRING) "
-                    f"WHEN ({t}) THEN 'true' ELSE 'false' END"
-                ).alias(f"__p{i}"))
-        except Unsupported:
-            cols = None
-    if cols is None:
-        comp = _F.col(computed) if computed else None
-        fc = FlatCompiler(_F.col("ts"), _F.col("labels"), comp,
-                          label_columns=label_columns)
-        cols = list(base_cols)
-        try:
-            for i, p in enumerate(preds):
-                fv = fc.compile(p)
-                val = (_F.when(_F.coalesce(_err(fv), _F.lit(False)),
-                               _F.lit(None).cast("string"))
-                       .when(_F.coalesce(_truthy(fv), _F.lit(False)), "true")
-                       .otherwise("false"))
-                cols.append(val.alias(f"__p{i}"))
-        except Unsupported:
-            return None
+    cols = [F.col("bucket"), F.col("entry"), F.col("ts")]
+    for i in range(len(preds)):
+        t, e = lanes[2 * i:2 * i + 2]
+        cols.append(F.when(e, F.lit(None).cast("string"))
+                    .when(t, "true").otherwise("false").alias(f"__p{i}"))
 
     np_ = len(preds)
     dirs = dict(directives)

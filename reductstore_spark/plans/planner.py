@@ -1,6 +1,6 @@
 """Query planner: choose the fastest correct execution for a `when` plan.
 
-Tiers (fastest first):
+Plan tiers (fastest first):
 
 1. **Column path** — stateless AST, no context padding: a single Catalyst
    predicate (whole plan stays in the JVM; filters get pushed toward the
@@ -26,19 +26,43 @@ Tiers (fastest first):
    non-conjunctive logic, non-const operands, ctx+stateful interplay):
    exact per-entry ordered replay via applyInPandas
    (operators/stateful.py).
+
+Every stateless part a tier needs as a Column goes through ONE predicate
+ladder, ``_compile``; a rung that refuses a condition (``Unsupported``)
+hands it to the next:
+
+a. **text flat tier** — the flat compiler run over SQL text
+   (condition/strtier.py): ~2 py4j calls per query instead of ~10^3 of
+   Column construction.  It refuses shapes over the layer-2 compile-size
+   screen (their exact layer-3 measurement needs JVM Columns) and text
+   over 64 KiB.
+b. **Column flat tier** — the same compiler over pyspark Columns
+   (condition/fastcols.py), with its full three-layer size budget.
+c. **struct tier** — the tagged-struct compiler (condition/columns.py),
+   for conditions within ``STRUCT_LAMBDA_BUDGET``.
+d. **row tier** — the per-row interpreter UDF (condition/rowtier.py).
+
+Callers that need the (truthy, err) lanes, or that have an exact
+stateful fallback of their own, stop the ladder early.
 """
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..condition import fastcols as _fc
+from ..condition import strtier as _st
 from ..condition import values as V
 from ..condition.ast import ComputedRef, Const, LabelRef, Node, Op, is_stateful
-from ..condition.columns import ColumnCompiler, compile_predicate
-from ..condition.fastcols import FlatCompiler, Unsupported, label_parts
+from ..condition.columns import (
+    STRUCT_LAMBDA_BUDGET,
+    compile_predicate,
+    lambda_depth_estimate,
+)
+from ..condition.fastcols import Unsupported
 from ..condition.parser import parse_when
 from ..condition.values import CondError, Value
 from ..operators.stateful import apply_when_stateful, apply_when_stateful_slim
@@ -58,6 +82,7 @@ def plan_when(df: DataFrame, when, strict: bool = False) -> DataFrame:
 
 def plan_parsed(df: DataFrame, node: Node, directives: Dict[str, List[Value]],
                 strict: bool = False, label_columns=None) -> DataFrame:
+    check_label_columns(label_columns)
     node = _flatten_and(node)
     ctx_before = directives.get("#ctx_before")
     ctx_after = directives.get("#ctx_after")
@@ -65,10 +90,7 @@ def plan_parsed(df: DataFrame, node: Node, directives: Dict[str, List[Value]],
 
     if not is_stateful(node):
         if not has_ctx:
-            df2, pred, added = _bound_or_struct(df, node, strict, label_columns)
-            out = df2.where(pred)
-            if added:
-                out = out.drop(*added)
+            out = _where(df, node, strict, label_columns)
         else:
             out = _window_ctx(df, node, directives, strict, label_columns)
         return _select_labels(out, directives)
@@ -102,6 +124,15 @@ def plan_parsed(df: DataFrame, node: Node, directives: Dict[str, List[Value]],
     return apply_when_stateful(df, node, directives, strict)
 
 
+def check_label_columns(label_columns) -> None:
+    """Virtual-label expressions are SQL text (``schema.
+    events_label_columns``); the compile tiers wrap them as needed."""
+    for name, v in (label_columns or {}).items():
+        if not isinstance(v, str):
+            raise TypeError(f"label_columns['{name}'] must be SQL text, "
+                            f"not {type(v).__name__}")
+
+
 def _flatten_and(node: Node) -> Node:
     """Splice nested $and conjuncts: ``$and[$and[a,b],c] -> $and[a,b,c]``.
 
@@ -123,35 +154,190 @@ def _flatten_and(node: Node) -> Node:
     return Op("$and", ops)
 
 
+def _where(df: DataFrame, node: Node, strict: bool,
+           label_columns=None) -> DataFrame:
+    df2, (pred,), added = _compile(df, [node], strict, label_columns)
+    out = df2.where(pred)
+    return out.drop(*added) if added else out
+
+
 def _predicate(df: DataFrame, node: Node, strict: bool, label_columns=None):
+    """Self-contained filter predicate (no bind projection), for callers
+    that filter a frame they do not own, e.g. a stream."""
+    return _compile(df, [node], strict, label_columns, bind=False)[1][0]
+
+
+# -- the predicate ladder -------------------------------------------------
+
+
+def _compile(df: DataFrame, nodes: Sequence[Node], strict: bool = False,
+             label_columns=None, lanes: Sequence[Node] = (),
+             bind: bool = True, last: str = "row"):
+    """Compile stateless conditions down the ladder (module docstring).
+
+    ``nodes`` compile to filter predicates and ``lanes`` to null-safe
+    ``(truthy, err)`` pairs; all of them share one rung.  Returns
+    ``(df2, cols, added)``: ``cols`` holds one predicate per node, then
+    two Columns per lane node; ``df2`` is ``df`` plus the bind columns
+    ``added`` (the caller drops them after use).
+
+    ``bind=False`` compiles leaves inline and adds no columns.  ``last``
+    is the last rung a caller accepts: ``"flat"`` or ``"struct"`` raise
+    ``Unsupported`` where the ladder would go on.  Lanes exist on the
+    flat rungs only.
+    """
     computed = "computed_labels" if "computed_labels" in df.columns else None
-    # expression-string tier first (r11), then the Column tiers
-    if all(isinstance(v, str) for v in (label_columns or {}).values()):
-        from ..condition.strtier import predicate_sql
+    for m in (_st._M, _fc):
         try:
-            return F.expr(predicate_sql(node, computed, label_columns,
-                                        strict))
+            return _flat(m, df, nodes, lanes, strict, label_columns or {},
+                         computed, bind)
         except Unsupported:
             pass
-    # flat codegen-able compiler for the common shapes (~100x faster);
-    # strict mode threads error messages through the flat tier (FV.emsg)
-    # so it stays on this path too
-    try:
-        comp = F.col(computed) if computed else None
-        return FlatCompiler(F.col("ts"), F.col("labels"), comp,
-                            label_columns=label_columns,
-                            strict=strict).predicate(node)
-    except Unsupported:
-        pass
+    if lanes or last == "flat":
+        raise Unsupported("outside the flat tier")
     # struct tier unless its nested-lambda analysis would stall (deep
     # conditions past the flat compile-size budget land here) — then the
     # bounded per-row interpreter tier (reference parity: condition.rs
     # applies the AST per record)
-    from ..condition.columns import STRUCT_LAMBDA_BUDGET, lambda_depth_estimate
-    if lambda_depth_estimate(node) > STRUCT_LAMBDA_BUDGET:
-        from ..condition.rowtier import interpreter_predicate
-        return interpreter_predicate(node, strict, computed_col=computed)
-    return compile_predicate(node, strict=strict, computed_col=computed)
+    deep = [lambda_depth_estimate(n) > STRUCT_LAMBDA_BUDGET for n in nodes]
+    if any(deep) and last == "struct":
+        raise Unsupported("over the struct-tier lambda budget")
+    from ..condition.rowtier import interpreter_predicate
+    return df, [interpreter_predicate(n, strict, computed_col=computed) if d
+                else compile_predicate(n, strict=strict, computed_col=computed)
+                for n, d in zip(nodes, deep)], []
+
+
+def _flat(m, df: DataFrame, nodes, lanes, strict: bool, label_columns,
+          computed: Optional[str], bind: bool):
+    """One flat rung: ``m`` is ``fastcols`` (Columns) or strtier's text
+    instance of it; both run the same code below.
+
+    Bound (``bind=True``): every distinct referenced label gets its
+    (raw, num, flt, lng) derivation materialized once in a projection;
+    predicates then reference those attributes, keeping generated methods
+    small (with full leaf derivations inlined at every reference,
+    whole-stage codegen blew past Janino's 64 KB method limit; see
+    BENCH_r01 tail).
+
+    The projection carries a non-deterministic dummy column as a
+    predicate-pushdown barrier: PushPredicateThroughNonJoin would inline
+    the aliases once per reference and re-explode the expression.  The
+    time-range / state / entry filters are applied BELOW this projection
+    (query.py _scan), so Parquet pushdown and partition pruning are
+    unaffected; `when` label predicates never reach the scan anyway
+    (map lookups / JSON extraction aren't pushable).
+    """
+    fn, text = m.F, m is _st._M
+    if text:
+        for n in (*nodes, *lanes):
+            _st._screen(n, strict)
+    adds: List[Tuple[str, object]] = []  # (alias, expression)
+    label_fvs = computed_fvs = None
+    if bind:
+        lnames, cnames = set(), set()
+        for n in (*nodes, *lanes):
+            _collect_refs(n, lnames, cnames)
+        label_fvs = bind_leaves(m, lnames, label_columns, adds)
+        if computed:
+            computed_fvs = bind_leaves(m, cnames, {}, adds, "cb", computed)
+    compiler = m.FlatCompiler(fn.col("ts"), fn.col("labels"),
+                              fn.col(computed) if computed else None,
+                              label_columns=label_columns,
+                              label_fvs=label_fvs, computed_fvs=computed_fvs,
+                              strict=strict)
+    groups = [[_wide_predicate(m, compiler, n, adds) if bind
+               else compiler.predicate(n)] for n in nodes]
+    for n in lanes:
+        fv = compiler.compile(n)
+        groups.append([fn.coalesce(m._truthy(fv), fn.lit(False)),
+                       fn.coalesce(m._err(fv), fn.lit(False))])
+
+    if text:
+        # the text cap counts what the SQL parser sees in one piece: the
+        # whole bound projection, or each inline expression
+        sizes = [[c.s for g in groups for c in g] + [c.s for _, c in adds]] \
+            if bind else [[c.s for c in g] for g in groups]
+        for texts in sizes:
+            total = sum(len(t) for t in texts)
+            if total > _st._MAX_TEXT:
+                raise Unsupported(f"string tier: {total} chars of SQL text")
+
+    cols = [c for g in groups for c in g]
+    added = []
+    if adds:
+        if text:
+            df = df.selectExpr(
+                "*", *[f"({c.s}) AS {_st.sql_ident(a)}" for a, c in adds],
+                "monotonically_increasing_id() AS __lb_barrier")
+        else:
+            df = df.select(
+                "*", *[c.alias(a) for a, c in adds],
+                F.monotonically_increasing_id().alias("__lb_barrier"))
+        # the barrier only works if (a) a project field is
+        # nondeterministic — PushPredicateThroughNonJoin skips such
+        # projects entirely — and (b) the predicate references it, or
+        # ColumnPruning strips the field and re-enables the push.
+        # OR-ing an always-false comparison on the nondeterministic id
+        # satisfies (b) without changing any result.
+        never = fn.col("__lb_barrier") < fn.lit(-1)
+        cols = [c | never for c in cols]
+        added = [a for a, _ in adds] + ["__lb_barrier"]
+    if text:
+        cols = [F.expr(c.s) for c in cols]
+    return df, cols, added
+
+
+def bind_leaves(m, names, label_columns, adds: list, prefix: str = "lb",
+                source: str = "labels") -> dict:
+    """Bind the (raw, num, flt, lng) parse of each named leaf once, as
+    ``adds`` entries ``__<prefix>{r,n,f,l}<i>``; returns name -> the four
+    attribute Columns, FlatCompiler's ``label_fvs``/``computed_fvs``.
+    ``m`` is the compiler module (fastcols or its text instance)."""
+    fn = m.F
+    fvs = {}
+    for i, name in enumerate(sorted(names)):
+        raw = (fn.expr(label_columns[name]) if name in label_columns
+               else fn.element_at(fn.col(source), fn.lit(name)))
+        aliases = [f"__{prefix}{k}{i}" for k in "rnfl"]
+        adds.extend(zip(aliases, (raw, *m.label_parts(raw))))
+        fvs[name] = tuple(fn.col(a) for a in aliases)
+    return fvs
+
+
+def _wide_predicate(m, compiler, node: Node, adds: list):
+    """Predicate for ``node`` over bound leaves.  A wide top-level
+    conjunction additionally binds each operand's (truthy, err[, emsg])
+    as attributes: _logical's flat fold references every operand O(n)
+    times, and with heavy operand trees (five date extractions in
+    when_date2) the inlined expression blew past Janino's 64 KB method
+    limit even with leaves bound — the count-aggregate stage then ran
+    interpreted.  Bound conjuncts make the fold a combination of
+    attribute reads."""
+    fn = m.F
+    inner = node
+    # parse_when wraps everything in a root $and; descend single-child
+    # $and chains (identical truthy/error semantics)
+    while (isinstance(inner, Op) and inner.name == "$and"
+           and len(inner.operands) == 1):
+        inner = inner.operands[0]
+    if not (isinstance(inner, Op) and inner.name in ("$and", "$or")
+            and len(inner.operands) >= 3):
+        return compiler.predicate(node)
+    ops = []
+    for j, o in enumerate(inner.operands):
+        fv = compiler.compile(o)  # may raise Unsupported
+        t, e = f"__cj{j}t{len(adds)}", f"__cj{j}e{len(adds)}"
+        adds.append((t, fn.coalesce(m._truthy(fv), fn.lit(False))))
+        adds.append((e, fn.coalesce(m._err(fv), fn.lit(False))))
+        nfv = m.FV(num=fn.col(t).cast("double"), err=fn.col(e),
+                   numeric_only=True, bound=1, skind="boolean")
+        if compiler.strict:
+            msg = f"__cj{j}m{len(adds)}"
+            adds.append((msg, m._emsg(fv)))
+            nfv.emsg = fn.col(msg)
+        ops.append(nfv)
+    return compiler.as_predicate(compiler._logical(inner.name, ops))
 
 
 def _collect_refs(node: Node, labels=None, computed=None):
@@ -171,154 +357,6 @@ def _collect_refs(node: Node, labels=None, computed=None):
         for o in node.operands:
             _collect_refs(o, labels, computed)
     return labels, computed
-
-
-def _lc_col(v):
-    """label_columns values may be SQL text (r11) or Columns."""
-    return F.expr(v) if isinstance(v, str) else v
-
-
-def _flat_bound(df: DataFrame, nodes: List[Node], label_columns=None,
-                strict: bool = False):
-    """Compile ``nodes`` with the flat compiler over PRE-BOUND leaves.
-
-    Every distinct referenced label gets its (raw, num, flt) derivation
-    materialized once in a projection; predicates then reference those
-    attributes, keeping generated methods small (a condition tree embeds
-    each operand a constant number of times per level — with full leaf
-    derivations inlined at every reference, whole-stage codegen blew past
-    Janino's 64 KB method limit; see BENCH_r01 tail).
-
-    The projection carries a non-deterministic dummy column as a
-    predicate-pushdown barrier: PushPredicateThroughNonJoin would inline
-    the aliases once per reference and re-explode the expression.  The
-    time-range / state / entry filters are applied BELOW this projection
-    (query.py _scan), so Parquet pushdown and partition pruning are
-    unaffected; `when` label predicates never reach the scan anyway
-    (map lookups / JSON extraction aren't pushable).
-
-    Returns (bound_df, [predicate Column per node], added_col_names);
-    raises Unsupported if any node is outside the flat subset.
-    """
-    # expression-string tier first (r11): the same compiler logic over a
-    # SQL-text substrate — ~2 py4j calls per query instead of ~10^3 of
-    # Column construction (guide §1.2, the measured ~0.5 s/query driver
-    # floor).  Falls back here on any Unsupported (incl. the compile-
-    # size screen, whose exact layer-3 measurement needs Columns).
-    if all(isinstance(v, str) for v in (label_columns or {}).values()):
-        from ..condition.strtier import flat_bound_sql
-        try:
-            return flat_bound_sql(df, nodes, label_columns, strict)
-        except Unsupported:
-            pass
-
-    computed_col = "computed_labels" if "computed_labels" in df.columns else None
-    label_columns = label_columns or {}
-    lnames, cnames = set(), set()
-    for n in nodes:
-        _collect_refs(n, lnames, cnames)
-
-    adds = []          # (alias, Column)
-    label_fvs = {}
-    computed_fvs = {}
-
-    def bind(name, raw, prefix, i):
-        ra, nu, fl, lg = (f"__{prefix}r{i}", f"__{prefix}n{i}",
-                          f"__{prefix}f{i}", f"__{prefix}l{i}")
-        num, flt, lng = label_parts(raw)
-        adds.extend([(ra, raw), (nu, num), (fl, flt), (lg, lng)])
-        return (F.col(ra), F.col(nu), F.col(fl), F.col(lg))
-
-    for i, name in enumerate(sorted(lnames)):
-        raw = (_lc_col(label_columns[name]) if name in label_columns
-               else F.element_at(F.col("labels"), F.lit(name)))
-        label_fvs[name] = bind(name, raw, "lb", i)
-    if computed_col:
-        for i, name in enumerate(sorted(cnames)):
-            raw = F.element_at(F.col(computed_col), F.lit(name))
-            computed_fvs[name] = bind(name, raw, "cb", i)
-
-    comp = F.col(computed_col) if computed_col else None
-    compiler = FlatCompiler(F.col("ts"), F.col("labels"), comp,
-                            label_columns=label_columns,
-                            label_fvs=label_fvs, computed_fvs=computed_fvs,
-                            strict=strict)
-
-    def compile_pred(n):
-        # Wide top-level conjunctions additionally bind each operand's
-        # (truthy, err[, emsg]) as attributes: _logical's flat fold
-        # references every operand O(n) times, and with heavy operand
-        # trees (five date extractions in when_date2) the inlined
-        # expression blew past Janino's 64 KB method limit even with
-        # leaves bound — the count-aggregate stage then ran interpreted.
-        # Bound conjuncts make the fold a combination of attribute reads.
-        from ..condition.ast import Op as _Op
-        from ..condition.fastcols import FV as _FV
-        from ..condition.fastcols import _emsg, _err, _truthy
-        inner = n
-        # parse_when wraps everything in a root $and; descend single-
-        # child $and chains (identical truthy/error semantics)
-        while (isinstance(inner, _Op) and inner.name == "$and"
-               and len(inner.operands) == 1):
-            inner = inner.operands[0]
-        if not (isinstance(inner, _Op) and inner.name in ("$and", "$or")
-                and len(inner.operands) >= 3):
-            return compiler.predicate(n)
-        ops = []
-        for j, o in enumerate(inner.operands):
-            fv = compiler.compile(o)  # may raise Unsupported
-            t, e = f"__cj{j}t{len(adds)}", f"__cj{j}e{len(adds)}"
-            adds.append((t, F.coalesce(_truthy(fv), F.lit(False))))
-            adds.append((e, F.coalesce(_err(fv), F.lit(False))))
-            nfv = _FV(num=F.col(t).cast("double"), err=F.col(e),
-                      numeric_only=True, bound=1, skind="boolean")
-            if strict:
-                m = f"__cj{j}m{len(adds)}"
-                adds.append((m, _emsg(fv)))
-                nfv.emsg = F.col(m)
-            ops.append(nfv)
-        combined = compiler._logical(inner.name, ops)
-        if strict:
-            em = _emsg(combined)
-            return F.when(em.isNotNull(), F.raise_error(em)).otherwise(
-                F.coalesce(_truthy(combined), F.lit(False)))
-        return F.coalesce(_truthy(combined) & ~_err(combined), F.lit(False))
-
-    preds = [compile_pred(n) for n in nodes]  # may raise Unsupported
-
-    if not adds:
-        return df, preds, []
-    bound = df.select(
-        "*", *[c.alias(a) for a, c in adds],
-        F.monotonically_increasing_id().alias("__lb_barrier"))
-    # the barrier only works if (a) a project field is nondeterministic —
-    # PushPredicateThroughNonJoin skips such projects entirely — and (b)
-    # the predicate references it, or ColumnPruning strips the field and
-    # re-enables the push.  OR-ing an always-false comparison on the
-    # nondeterministic id satisfies (b) without changing any result.
-    never = F.col("__lb_barrier") < F.lit(-1)
-    preds = [p | never for p in preds]
-    return bound, preds, [a for a, _ in adds] + ["__lb_barrier"]
-
-
-def _bound_or_struct(df: DataFrame, node: Node, strict: bool,
-                     label_columns=None):
-    """(df2, predicate, added_cols): flat compiler over bound leaves when
-    possible (strict included — it threads error messages), struct
-    compiler otherwise (unsupported shapes)."""
-    try:
-        bound, preds, added = _flat_bound(df, [node], label_columns,
-                                          strict=strict)
-        return bound, preds[0], added
-    except Unsupported:
-        pass
-    computed = "computed_labels" if "computed_labels" in df.columns else None
-    from ..condition.columns import STRUCT_LAMBDA_BUDGET, lambda_depth_estimate
-    if lambda_depth_estimate(node) > STRUCT_LAMBDA_BUDGET:
-        from ..condition.rowtier import interpreter_predicate
-        return df, interpreter_predicate(node, strict,
-                                         computed_col=computed), []
-    return df, compile_predicate(node, strict=strict, computed_col=computed), []
 
 
 def _select_labels(df: DataFrame, directives: Dict[str, List[Value]]) -> DataFrame:
@@ -352,7 +390,7 @@ def _padding(directive: Optional[List[Value]], key: str) -> Tuple[bool, int]:
 
 def _window_ctx(df: DataFrame, node: Node, directives, strict: bool,
                 label_columns=None) -> DataFrame:
-    df2, pred, added = _bound_or_struct(df, node, strict, label_columns)
+    df2, (pred,), added = _compile(df, [node], strict, label_columns)
     marked = df2.withColumn("__match", pred.cast("int"))
     return _propagate_ctx(marked, directives, added)
 
@@ -411,31 +449,16 @@ def _rewrite_counter_conjunct(df: DataFrame, node: Node, strict: bool,
     if sf.name == "$each_n" and n == 0:
         raise CondError("Value '0' is not a valid operand for $each_n")
 
-    prefix = node.operands[:i]
-    rest = node.operands[i + 1:]
-
-    pref_node = Op("$and", list(prefix))
-    rest_node = Op("$and", list(rest))
-    added = []
+    pref_node = Op("$and", list(node.operands[:i]))
+    rest_node = Op("$and", list(node.operands[i + 1:]))
     try:
-        df, (pref_pred, rest_pred), added = _flat_bound(
-            df, [pref_node, rest_node], label_columns, strict=strict)
+        df, (pref_pred, rest_pred), added = _compile(
+            df, [pref_node, rest_node], strict, label_columns, last="struct")
     except Unsupported:
-        pref_pred = rest_pred = None
-    if pref_pred is None:
         # struct-tier lambda-analysis budget (condition/columns.py): a
         # too-deep prefix/rest falls back to the interpreter stateful
-        # pipeline (return None) rather than stalling the analyzer here
-        from ..condition.columns import (
-            STRUCT_LAMBDA_BUDGET,
-            lambda_depth_estimate,
-        )
-        if max(lambda_depth_estimate(pref_node),
-               lambda_depth_estimate(rest_node)) > STRUCT_LAMBDA_BUDGET:
-            return None
-        computed = "computed_labels" if "computed_labels" in df.columns else None
-        pref_pred = compile_predicate(pref_node, strict=strict, computed_col=computed)
-        rest_pred = compile_predicate(rest_node, strict=strict, computed_col=computed)
+        # pipeline rather than stalling the analyzer here
+        return None
 
     w = (Window.partitionBy(*_PARTITION_COLS).orderBy("ts")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -513,65 +536,34 @@ def _rewrite_time_stateful(df: DataFrame, node: Node, strict: bool,
     except CondError:
         return None  # operand errors per-record -> interpreter replays it
 
-    computed = "computed_labels" if "computed_labels" in df.columns else None
-    comp = F.col(computed) if computed else None
     pref_node = Op("$and", list(node.operands[:i]))
     rest_node = Op("$and", list(node.operands[i + 1:]))
-    cols = None
-    if all(isinstance(v, str) for v in (label_columns or {}).values()):
-        # expression-string fast path (r11) — same fallback ladder
-        from ..condition.strtier import predicate_sql, truthy_err_sql
-        try:
-            pref_text = predicate_sql(pref_node, computed, label_columns,
-                                      strict)
-            cols = [F.col("bucket"), F.col("entry"), F.col("ts"),
-                    F.expr(pref_text).alias("__pref")]
-            if inp_node is not None:
-                if strict:
-                    # input errors raise — but only for records the gate
-                    # actually evaluates (When short-circuits per row)
-                    inp_text = predicate_sql(inp_node, computed,
-                                             label_columns, True)
-                    inp_col = F.expr(f"CASE WHEN ({pref_text}) THEN "
-                                     f"({inp_text}) ELSE FALSE END")
-                    ierr_col = F.lit(False)
-                else:
-                    t, e = truthy_err_sql(inp_node, computed, label_columns)
-                    inp_col, ierr_col = F.expr(t), F.expr(e)
-                cols += [inp_col.alias("__inp"), ierr_col.alias("__ierr")]
-        except Unsupported:
-            cols = None
-    if cols is None:
-        try:
-            fc = FlatCompiler(F.col("ts"), F.col("labels"), comp,
-                              label_columns=label_columns, strict=strict)
-            pref_pred = fc.predicate(pref_node)
-            cols = [F.col("bucket"), F.col("entry"), F.col("ts"),
-                    pref_pred.alias("__pref")]
-            if inp_node is not None:
-                if strict:
-                    # input errors raise — but only for records the gate
-                    # actually evaluates (When short-circuits per row)
-                    inp_col = F.when(pref_pred, fc.predicate(inp_node)) \
-                        .otherwise(F.lit(False))
-                    ierr_col = F.lit(False)
-                else:
-                    nfc = FlatCompiler(F.col("ts"), F.col("labels"), comp,
-                                       label_columns=label_columns)
-                    fv = nfc.compile(inp_node)
-                    from ..condition.fastcols import _err, _truthy
-                    inp_col = F.coalesce(_truthy(fv), F.lit(False))
-                    ierr_col = F.coalesce(_err(fv), F.lit(False))
-                cols += [inp_col.alias("__inp"), ierr_col.alias("__ierr")]
-        except Unsupported:
-            return None
+    # strict: the gate input is a strict predicate; else its null-safe
+    # (truthy, err) lanes
+    gate_in = [inp_node] if inp_node is not None else []
+    try:
+        _, cols, _ = _compile(
+            df, [pref_node] + (gate_in if strict else []), strict,
+            label_columns, lanes=[] if strict else gate_in, bind=False,
+            last="flat")
+    except Unsupported:
+        return None
+    pref_pred = cols[0]
+    keys = [F.col("bucket"), F.col("entry"), F.col("ts"),
+            pref_pred.alias("__pref")]
+    if inp_node is not None:
+        if strict:
+            # input errors raise — but only for records the gate
+            # actually evaluates (When short-circuits per row)
+            inp_col = F.when(pref_pred, cols[1]).otherwise(F.lit(False))
+            ierr_col = F.lit(False)
+        else:
+            inp_col, ierr_col = cols[1:]
+        keys += [inp_col.alias("__inp"), ierr_col.alias("__ierr")]
 
     from ..operators.stateful import each_t_keys, gate_keys
-    keys = df.select(*cols)
+    keys = df.select(*keys)
     kept = (each_t_keys(keys, period_us) if sf.name == "$each_t"
             else gate_keys(keys, period_us))
     joined = df.join(kept, ["bucket", "entry", "ts"], "left_semi")
-    df2, rest_pred, added = _bound_or_struct(joined, rest_node, strict,
-                                             label_columns)
-    out = df2.where(rest_pred)
-    return out.drop(*added) if added else out
+    return _where(joined, rest_node, strict, label_columns)

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from .condition.parser import parse_when
 from .operators.glob import filter_entries, patterns_to_column
-from .plans.planner import plan_parsed
+from .plans.planner import check_label_columns, plan_parsed
 from .schema import STATE_FINISHED
 
 
@@ -47,6 +47,7 @@ class QueryEngine:
         label_columns=None,
         entry_names: Optional[Sequence[str]] = None,
     ) -> DataFrame:
+        check_label_columns(label_columns)
         df = self._scan(records, entries, start, stop, entry_names)
         if when is not None:
             node, directives = parse_when(when)

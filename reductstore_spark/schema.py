@@ -130,10 +130,10 @@ def events_as_records(spark: SparkSession, sf_dir: str,
 def events_label_columns():
     """Virtual-label expressions for the events mapping — must mirror the
     labels map construction above exactly (absent => null).  Returned as
-    SQL TEXT (r11): the condition tiers wrap them into Columns lazily
-    (``fastcols.FlatCompiler._lc`` / ``planner._lc_col``), and the
+    SQL TEXT, the only form ``label_columns`` accepts: the Column tiers
+    wrap it lazily (``fastcols.FlatCompiler._lc``), and the
     expression-string tier consumes the text directly — constructing
-    this dict is now ZERO py4j round-trips per `when` query invocation."""
+    this dict is ZERO py4j round-trips per `when` query invocation."""
     return {
         "user": "CAST(user_id AS STRING)",
         "value": "CAST(value AS STRING)",

@@ -40,13 +40,25 @@ def continuous_query(
     filter semantics as QueryEngine.query (minus final ordering — a
     stream has no total order; per-entry ts order is preserved by the
     writer within each batch)."""
+    return versioned_stream(spark, store_root, when, entries, start, strict,
+                            max_files_per_trigger).drop("__seq")
+
+
+def versioned_stream(spark: SparkSession, store_root: str, when=None,
+                     entries: Optional[Sequence[str]] = None,
+                     start: Optional[int] = None, strict: bool = False,
+                     max_files_per_trigger: int = 64) -> DataFrame:
+    """``continuous_query`` plus each row's store write sequence
+    ``__seq``: one micro-batch may carry several versions of a record
+    (a rewritten partition and a belated duplicate), and ``__seq`` is
+    the only record of which one the source considers newest."""
     reader = (
         spark.readStream
         .schema(_store_schema())
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(store_root)
     )
-    df = reader.drop("__seq", "ts_day")
+    df = reader.drop("ts_day")
     if entries is not None:
         # compile the glob to a JVM predicate (same as the batch path):
         # no driver round-trip at registration, and entries that first

@@ -23,13 +23,12 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..condition.parser import parse_when
-from ..plans.planner import _predicate
 from ..sources.store import RecordStore
-from .continuous import continuous_query
+from .continuous import versioned_stream
 
 
 @dataclass
@@ -48,14 +47,15 @@ class ReplicationSettings:
 def replication_stream(spark: SparkSession, src_root: str,
                        settings: ReplicationSettings,
                        exclude_entries: Optional[List[str]] = None) -> DataFrame:
-    """The filtered/renamed stream of records to replicate.
+    """The filtered/renamed stream of records to replicate, with each
+    row's source write sequence ``__seq``.
 
     ``exclude_entries``: exact source entry names dropped from the
     stream regardless of the include patterns — used for the PR-1567
     feedback-loop guard (a ``$system``-source replication must not
     replicate its own per-batch diagnostics, or each batch's diagnostic
     record becomes new source data for the next)."""
-    df = continuous_query(
+    df = versioned_stream(
         spark, src_root,
         entries=settings.entries if settings.entries else None,
         when=settings.when,
@@ -99,6 +99,12 @@ def start_replication(spark: SparkSession, src_root: str, dst_root: str,
     def sink(batch_df: DataFrame, _batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        # keep the source's newest version of each record: the replica
+        # gives the whole batch one sequence number of its own
+        newest = Window.partitionBy("bucket", "entry", "ts") \
+            .orderBy(F.col("__seq").desc())
+        batch_df = (batch_df.withColumn("__rn", F.row_number().over(newest))
+                    .where(F.col("__rn") == 1).drop("__rn", "__seq"))
         n = batch_df.count()
         try:
             dst.write(batch_df, compression=settings.compression)

@@ -306,3 +306,76 @@ def test_screened_but_small_tree_stays_flat(spark):
                       strict=True).compile(node)  # ...but kept (tree ~3.4k)
     assert fv is not None
     assert _BUDGET_TREE > 10_000  # sanity: budget far above this shape
+
+
+_SCREENED = {"$eq": [{"$cast": [{"$gte": [{"$minute": ["&a", "Europe/Berlin"]},
+                                          0]}, "float"]}, 1]}
+
+_LADDER_CALLERS = {
+    "filter": (_SCREENED, False),
+    "ctx_filter": ({"#ctx_before": 1, **_SCREENED}, False),
+    "each_n_prefix": ({"$and": [_SCREENED, {"$each_n": 2}]}, False),
+    "gate_input": ({"$gate": ["1s", _SCREENED]}, False),
+    "gate_input_strict": ({"$and": [{"&ok": {"$eq": 1}},
+                                    {"$gate": ["1s", _SCREENED]}]}, True),
+    "slim_lane": ({"$or": [{"$each_n": 3}, _SCREENED]}, False),
+}
+
+
+@pytest.mark.parametrize("caller", sorted(_LADDER_CALLERS))
+def test_screened_shape_takes_the_column_rung(spark, monkeypatch, caller):
+    """The text tier refuses the screened-but-small shape at the
+    layer-2 screen; every planner caller must then compile it on the
+    Column flat rung (not skip to the struct tier or the interpreter)
+    and agree with the WhenFilter oracle row for row."""
+    from reductstore_spark.condition import fastcols
+    from reductstore_spark.condition.interpreter import (
+        FilterRecord,
+        WhenFilter,
+    )
+    from reductstore_spark.plans import planner
+
+    when, strict = _LADDER_CALLERS[caller]
+    rows = []
+    for e in ("e1", "e2"):
+        for i in range(24):
+            if i % 5 == 4:
+                labels = {"a": "x", "ok": "0"}  # $minute parse error
+            elif i % 7 == 6:
+                labels = {"ok": "0"}  # &a missing
+            else:
+                labels = {"a": str(i * 37_000_000), "ok": "1"}
+            rows.append(("b", e, i * 300_000, None, "", 1, labels, None))
+    df = spark.createDataFrame(
+        rows, "bucket string, entry string, ts long, payload binary, "
+        "content_type string, state int, labels map<string,string>, "
+        "computed_labels map<string,string>")
+
+    rungs = []
+    real_flat = planner._flat
+
+    def spy(m, *args):
+        out = real_flat(m, *args)
+        rungs.append(m.__name__)
+        return out
+
+    monkeypatch.setattr(planner, "_flat", spy)
+    got = sorted((r["entry"], r["ts"]) for r in
+                 planner.plan_when(df, when, strict=strict)
+                 .select("entry", "ts").collect())
+    assert fastcols.__name__ in rungs, rungs
+
+    node, directives = parse_when(json.loads(json.dumps(when)))
+    expect = []
+    for e in ("e1", "e2"):
+        wf = WhenFilter(node, directives, strict)
+        for _b, ent, ts, _p, _ct, _st, labels, _cl in rows:
+            if ent != e:
+                continue
+            out = wf.feed(FilterRecord(ts, dict(labels), {},
+                                       extra=(ent, ts)))
+            if out is None:
+                break
+            expect.extend(r.extra for r in out)
+    assert got == sorted(expect)
+    assert got  # the shape passes on valid rows

@@ -134,6 +134,9 @@ def test_merge_tie_break_by_entry_name(spark):
 def test_count_matches_query(records):
     when = {"&flag": {"$eq": True}}
     assert QE.count(records, when=when) == len(oracle(when))
+    # virtual labels are SQL text; a Column value is rejected up front
+    with pytest.raises(TypeError, match="SQL text"):
+        QE.count(records, when=when, label_columns={"flag": F.col("entry")})
 
 
 class TestGlobUnit:

@@ -187,6 +187,46 @@ def test_replication_entry_glob_prefix_and_when(spark, tmp_path):
     assert {r["ts"] for r in rows} == {1_000_000, 2_000_000, 3_000_000}
 
 
+def test_replication_keeps_source_version_order(spark, tmp_path):
+    """A rewritten partition (still holding v1 of a key) and a belated
+    v2 of that key ship in one micro-batch: the replica must keep the
+    source's newest version, not an arbitrary one of the two."""
+    src_root = str(tmp_path / "src")
+    dst_root = str(tmp_path / "dst")
+    cp = str(tmp_path / "cp")
+    src = RecordStore(spark, src_root)
+    settings = ReplicationSettings(src_bucket="b1", dst_bucket="b1")
+
+    def replicate():
+        q = start_replication(spark, src_root, dst_root, settings, cp,
+                              available_now=True)
+        q.awaitTermination(120)
+
+    def write_v(version):
+        src.write(spark.createDataFrame(
+            [("b1", "e", 1_000_000, None, "", 1, {"v": version}, {})],
+            SCHEMA))
+
+    write_v("1")
+    src.write(spark.createDataFrame(mk_rows("e", 1, base=2_000_000), SCHEMA))
+    replicate()
+    # relabel a neighbour: rewrites the day partition, v1 included
+    src.update_labels(spark.createDataFrame(
+        [("b1", "e", 2_000_000, {"n": "1"}, None)],
+        "bucket string, entry string, ts long, "
+        "upsert map<string,string>, remove array<string>"))
+    write_v("2")
+    replicate()
+
+    def version(root):
+        (row,) = (RecordStore(spark, root).read()
+                  .where(F.col("ts") == 1_000_000).collect())
+        return row["labels"]["v"]
+
+    assert version(src_root) == "2"
+    assert version(dst_root) == "2"
+
+
 def test_windowed_rollup_watermark_late_data(spark, tmp_path):
     """Watermarked rollup: a belated write folds into its bucket as long
     as the bucket is still open (window end > watermark — for windowed

@@ -44,7 +44,7 @@ def main() -> None:
     only = opt("--only")
     no_exec = "--no-exec" in argv
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
 
     from pyspark.sql import functions as F
 

@@ -42,7 +42,9 @@ N = int(sys.argv[2]) if len(sys.argv) > 2 else 200
 
 
 def main():
-    spark = get_session("fuzzhunt", master="local[16]", shuffle_partitions=16)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    spark = get_session("fuzzhunt", master=f"local[{cpus}]",
+                        shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     total_conds = 0
     total_finds = 0

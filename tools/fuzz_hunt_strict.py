@@ -92,8 +92,9 @@ def _compile_chunk(df, chunk):
 
 
 def main():
-    spark = get_session("fuzzstrict", master="local[16]",
-                        shuffle_partitions=16)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    spark = get_session("fuzzstrict", master=f"local[{cpus}]",
+                        shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     # Profiled on seed 8250: the per-seed cost is NOT Janino codegen —
     # disabling whole-stage codegen changed nothing — it is eager
